@@ -35,11 +35,14 @@ from pyspark.sql import functions as F
 def load_numts(spark: SparkSession, path: str) -> DataFrame:
     """NUMT dimension from the reference's tab format (chrom, start,
     end, score — ``MTClassifierModel.scala:157-172``), kept distributed
-    and broadcastable instead of driver-side I/O."""
+    and broadcastable instead of driver-side I/O. The schema is given,
+    so loading launches no inference job."""
     return (
-        spark.read.options(sep="\t", header="false")
+        spark.read.schema(
+            "chrom STRING, start STRING, `end` STRING, score STRING"
+        )
+        .options(sep="\t", header="false")
         .csv(path)
-        .toDF("chrom", "start", "end", "score")
         .select(
             "chrom",
             F.col("start").cast("int").alias("start"),

@@ -98,9 +98,7 @@ def mt_features(
     )
 
 
-def nt_features(
-    nt_aln: DataFrame, numts: DataFrame | None = None, compat_chrom_sum: bool = False
-) -> DataFrame:
+def nt_features(nt_aln: DataFrame, numts: DataFrame | None = None) -> DataFrame:
     """Nuclear per-read features (``BamReader.scala:82-118``), intended
     column binding (SURVEY.md §8 Q1): NTScore = XQ mapping score,
     NUMTOverlaps = NUMT interval score (dropped entirely by the
@@ -113,9 +111,7 @@ def nt_features(
 
     valid = _tag_columns(valid_alignments(nt_aln))
     if numts is not None:
-        valid = numt_overlap_score(
-            valid, numts, compat_chrom_sum=compat_chrom_sum
-        )
+        valid = numt_overlap_score(valid, numts)
     else:
         valid = valid.withColumn("numt_score", F.lit(0.0))
     per_alignment = valid.select(

@@ -4,6 +4,7 @@ per-read pairwise reduction ``BamReader.scala:147-153, 198-203``).
 The reference collects an 88k-row table to the driver, broadcasts a
 ``Map[(v1,v2), Int]`` and probes it per C(n,2) variant pair inside a
 ``Dataset.map``. Spark-first rewrite: keep the table distributed,
+form each read's pairs in-row from its variant array (no self-join),
 normalize pairs to a canonical (least, greatest) key, and let Catalyst
 run a **broadcast hash join** — identical semantics, no driver-side
 collect, and the 100 TB side never moves.
@@ -23,19 +24,18 @@ from pyspark.sql import Window as W
 LD_SCALE = 100_000
 
 
-def ld_scores_table(
-    spark: SparkSession, path: str, header: bool = False
-) -> DataFrame:
-    """Load a tab-separated LD file → (variant1, variant2, ld int).
+def ld_scores_table(spark: SparkSession, path: str) -> DataFrame:
+    """Load a tab-separated LD file → (v1, v2, ld int).
 
-    ``header=False`` fixes the reference's off-by-one: the real
-    mitomap.ld has no header line, yet ``LD.scala:41-44`` reads it with
-    header=true and silently eats the first pair (SURVEY.md §8 Q4).
+    Read without a header line — the real mitomap.ld has none, yet
+    ``LD.scala:41-44`` reads it with header=true and silently eats the
+    first pair (SURVEY.md §8 Q4). The schema is given, so loading
+    launches no inference job.
     """
     raw = (
-        spark.read.options(sep="\t", header=str(header).lower())
+        spark.read.schema("variant1 STRING, variant2 STRING, r STRING")
+        .options(sep="\t", header="false")
         .csv(path)
-        .toDF("variant1", "variant2", "r")
     )
     return normalize_ld(raw.withColumn("r", F.col("r").cast("double")))
 
@@ -72,32 +72,32 @@ def pairwise_ld_score(mt_features: DataFrame, ld: DataFrame) -> DataFrame:
     """Per-read LD score: sum of LD over all C(n,2) unordered variant
     pairs of the read's variant list (``BamReader.scala:198-203``).
 
-    Plan: posexplode the variant array → self-join on (Read, pos1<pos2)
-    to form combinations → broadcast-join the canonicalized LD dim →
-    per-read sum. Reads with <2 variants or no scored pair get LD=0 via
-    the left join back onto the feature table.
+    Plan: each row builds its own pairs from ``Variants`` (element i
+    with the ``slice`` after it, canonicalized by least/greatest) →
+    ``explode_outer`` → left broadcast join of the canonicalized LD dim
+    → per-read sum. The regrouping keys are ``Read`` plus columns that
+    depend on it, so the input's hash partitioning on ``Read`` already
+    satisfies the aggregate: no join on ``Read`` and no new exchange.
+    Reads with <2 variants or no scored pair get LD=0.
     """
-    exploded = mt_features.select(
-        "Read", F.posexplode("Variants").alias("pos", "v")
+    variants = F.col("Variants")
+    n = F.size(variants)
+    pairs = F.flatten(
+        F.transform(
+            variants,
+            lambda a, i: F.transform(
+                F.slice(variants, i + 2, n - i - 1),
+                lambda b: F.struct(
+                    F.least(a, b).alias("v1"), F.greatest(a, b).alias("v2")
+                ),
+            ),
+        )
     )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.Read") == F.col("b.Read"))
-        & (F.col("a.pos") < F.col("b.pos")),
-    ).select(
-        F.col("a.Read").alias("Read"),
-        F.least("a.v", "b.v").alias("v1"),
-        F.greatest("a.v", "b.v").alias("v2"),
-    )
-    scores = (
-        pairs.join(F.broadcast(ld), ["v1", "v2"], "inner")
-        .groupBy("Read")
-        .agg(F.sum("ld").alias("LD"))
-    )
+    keys = [c for c in mt_features.columns if c != "Variants"]
     return (
-        mt_features.join(scores, "Read", "left")
-        .withColumn("LD", F.coalesce(F.col("LD"), F.lit(0)).cast("long"))
-        .drop("Variants")
+        mt_features.select(*keys, F.explode_outer(pairs).alias("_p"))
+        .select(*keys, "_p.v1", "_p.v2")
+        .join(F.broadcast(ld), ["v1", "v2"], "left")
+        .groupBy(*keys)
+        .agg(F.coalesce(F.sum("ld"), F.lit(0)).cast("long").alias("LD"))
     )

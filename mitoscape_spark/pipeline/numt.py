@@ -3,9 +3,8 @@
 
 The reference parses NUMT intervals but never compares positions — it
 sums every NUMT score on the alignment's chromosome (SURVEY.md §8 Q6).
-Default here is the **intended** interval-overlap semantics as a
-broadcast range join; ``compat_chrom_sum=True`` reproduces the
-as-written per-chromosome sum.
+Here only the **intended** interval-overlap semantics exist, as a
+broadcast range join.
 
 Scale: the NUMT dimension is tiny (tens of rows) → broadcast, the
 range predicate is a join residual, the alignment side never shuffles.
@@ -17,19 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_READ_LENGTH = 100
+READ_LENGTH = 100
 
 
-def numt_overlap_score(
-    aln: DataFrame,
-    numts: DataFrame,
-    compat_chrom_sum: bool = False,
-    read_length: int = DEFAULT_READ_LENGTH,
-) -> DataFrame:
+def numt_overlap_score(aln: DataFrame, numts: DataFrame) -> DataFrame:
     """Add ``numt_score`` = sum of scores of overlapping NUMTs (0 if none).
 
-    ``aln`` needs columns chrom/start; overlap uses
-    [start, start+read_length) vs the NUMT's [start, end].
+    ``aln`` needs columns chrom/start/read_name; overlap uses
+    [start, start+READ_LENGTH) vs the NUMT's [start, end].
     """
     n = numts.select(
         F.col("chrom").alias("_n_chrom"),
@@ -37,24 +31,7 @@ def numt_overlap_score(
         F.col("end").alias("_n_end"),
         F.col("score").alias("_n_score"),
     )
-    if compat_chrom_sum:
-        per_chrom = n.groupBy("_n_chrom").agg(
-            F.sum("_n_score").alias("_chrom_score")
-        )
-        return (
-            aln.join(
-                F.broadcast(per_chrom),
-                aln["chrom"] == per_chrom["_n_chrom"],
-                "left",
-            )
-            .withColumn(
-                "numt_score",
-                F.coalesce(F.col("_chrom_score"), F.lit(0.0)).cast("double"),
-            )
-            .drop("_n_chrom", "_chrom_score")
-        )
-
-    aln_end = F.col("start") + F.lit(read_length)
+    aln_end = F.col("start") + F.lit(READ_LENGTH)
     overlaps = (
         aln.join(
             F.broadcast(n),

@@ -21,10 +21,38 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[32] test harness; on a real cluster the
-# submitter overrides master/memory and AQE re-plans partition counts.
-_LOCAL_CORES = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local defaults follow the host: every core this process may run on,
+# and half the physical memory as driver heap (local mode runs the
+# tasks inside the driver JVM, whose resident set grows well past -Xmx),
+# capped at 16g. A cgroup v2 memory limit, when lower, counts as the
+# physical memory. SPARK_GRAFT_* override both; on a real cluster the
+# submitter sets master/memory and AQE re-plans partition counts.
 
+
+def _host_cores() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # macOS / Windows
+        return os.cpu_count() or 1
+
+
+def _host_driver_mem_gib() -> int:
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return 16
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            phys = min(phys, int(fh.read()))
+    except (OSError, ValueError):  # no cgroup v2, or "max"
+        pass
+    return max(1, min(16, phys // 2 // 2**30))
+
+
+_LOCAL_CORES = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cores())
+_LOCAL_DRIVER_MEM = (
+    os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{_host_driver_mem_gib()}g"
+)
 
 def get_spark(
     app_name: str = "mitoscape_spark",
@@ -67,14 +95,11 @@ def get_spark(
         # Test/bench default; spark-submit on a cluster sets its own master
         # and this branch is skipped via the env flag.
         builder = builder.master(f"local[{_LOCAL_CORES}]")
-        # local mode = one JVM for driver + all 32 task threads; the 1 GiB
+        # local mode = one JVM for driver + all task threads; the 1 GiB
         # default heap OOMs on legitimately sized task state (e.g. packed
         # GEMM blocks). Only applied to the local harness — clusters size
         # executors via spark-submit. No effect if a JVM already exists.
-        builder = builder.config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        builder = builder.config("spark.driver.memory", _LOCAL_DRIVER_MEM)
 
     n_shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", _LOCAL_CORES)

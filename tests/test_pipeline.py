@@ -2,9 +2,9 @@
 
 Covers: validity filter + tag extraction + per-read aggregation
 (A1/A2), LD normalization + symmetric pairwise scoring (A3/J5), NUMT
-interval vs compat scoring (J6), MapQ z-normalization incl. the empty
-guard (A4/P9/P10), and a golden end-to-end classify run (fixed seed in,
-stable surviving-read set out).
+interval scoring (J6), MapQ z-normalization incl. empty input
+(A4/P9/P10), a golden end-to-end classify run (fixed seed in, stable
+surviving-read set out), and that building classify launches no job.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from mitoscape_spark.pipeline import fixtures
 from mitoscape_spark.pipeline.classify import build_feature_table, classify
 from mitoscape_spark.pipeline.features import mt_features, nt_features
 from mitoscape_spark.pipeline.ld import normalize_ld, pairwise_ld_score
+from mitoscape_spark.pipeline.ml import train_rf
 from mitoscape_spark.pipeline.normalize import normalize_mapq
 from mitoscape_spark.pipeline.numt import numt_overlap_score
 
@@ -40,6 +41,12 @@ def ld(spark):
 @pytest.fixture(scope="module")
 def numts(spark):
     return fixtures.to_spark(spark, fixtures.numts_pdf())
+
+
+@pytest.fixture(scope="module")
+def model(spark):
+    training = fixtures.to_spark(spark, fixtures.labeled_features_pdf(1500))
+    return train_rf(training)
 
 
 def test_mt_features_shape(mt_aln):
@@ -103,13 +110,29 @@ def test_pairwise_ld_symmetric(spark):
     feats = spark.createDataFrame(
         [
             ("r1", 10, 1, 0, ["10A", "20C", "30G"]),  # pairs: (10A,20C)+(20C,30G)
-            ("r2", 10, 1, 0, ["20C", "10A"]),  # swapped order, same pair
-            ("r3", 10, 1, 0, ["10A"]),  # <2 variants → 0
+            ("r2", 11, 2, 1, ["20C", "10A"]),  # swapped order, same pair
+            ("r3", 12, 1, 0, ["10A"]),  # <2 variants → 0
+            ("r4", 13, 1, 0, []),  # no variants → 0
+            # 6 pairs; scored: (10A,20C), (20C,30G) → 70000
+            ("r5", 14, 3, 2, ["30G", "99T", "10A", "20C"]),
+            # repeated string: (10A,20C) twice + (10A,10A) unscored
+            ("r6", 15, 1, 0, ["10A", "20C", "10A"]),
         ],
-        ["Read", "MTMapQ", "MTNumAlignments", "MTEditDist", "Variants"],
+        "Read string, MTMapQ long, MTNumAlignments long, MTEditDist long,"
+        " Variants array<string>",
     )
-    out = {r.Read: r.LD for r in pairwise_ld_score(feats, ld).collect()}
-    assert out == {"r1": 70000, "r2": 50000, "r3": 0}
+    scored = pairwise_ld_score(feats, ld)
+    assert scored.columns == [
+        "Read", "MTMapQ", "MTNumAlignments", "MTEditDist", "LD",
+    ]
+    rows = {r.Read: r for r in scored.collect()}
+    assert {k: r.LD for k, r in rows.items()} == {
+        "r1": 70000, "r2": 50000, "r3": 0, "r4": 0, "r5": 70000,
+        "r6": 100000,
+    }
+    # per-read columns pass through untouched
+    assert (rows["r2"].MTMapQ, rows["r2"].MTNumAlignments) == (11, 2)
+    assert rows["r5"].MTEditDist == 2
 
 
 def test_numt_interval_vs_compat(spark):
@@ -125,17 +148,10 @@ def test_numt_interval_vs_compat(spark):
         r.read_name: r.numt_score
         for r in numt_overlap_score(aln, numts).collect()
     }
+    # interval overlap, not the reference's whole-chromosome sum (0.75)
     assert intended["r1"] == pytest.approx(0.5)
     assert intended["r2"] == pytest.approx(0.25)
     assert intended["r3"] == 0.0
-    compat = {
-        r.read_name: r.numt_score
-        for r in numt_overlap_score(aln, numts, compat_chrom_sum=True).collect()
-    }
-    # as-written reference: whole-chromosome sum regardless of position
-    assert compat["r1"] == pytest.approx(0.75)
-    assert compat["r2"] == pytest.approx(0.75)
-    assert compat["r3"] == 0.0
 
 
 def test_normalize_mapq_pooled(spark):
@@ -170,12 +186,12 @@ def test_feature_table_inner_join(mt_aln, nt_aln, ld, numts):
 def test_classify_end_to_end_golden(spark, mt_aln, nt_aln, ld, numts):
     training = fixtures.to_spark(spark, fixtures.labeled_features_pdf(1500))
     result = classify(
-        mt_aln, nt_aln, ld, numts, training=training, prob=0.5
+        mt_aln, nt_aln, ld, numts, model=train_rf(training), prob=0.5
     )
     survivors = sorted(r.Read for r in result.survivors.collect())
-    # deterministic: seeded fixtures + seeded RF
+    # deterministic: seeded fixtures + seeded RF, retrained from scratch
     again = classify(
-        mt_aln, nt_aln, ld, numts, training=training, prob=0.5
+        mt_aln, nt_aln, ld, numts, model=train_rf(training), prob=0.5
     )
     assert survivors == sorted(r.Read for r in again.survivors.collect())
     # surviving alignments are a subset of the original MT alignments
@@ -188,3 +204,32 @@ def test_classify_end_to_end_golden(spark, mt_aln, nt_aln, ld, numts):
         assert r.read_name in surv_set
     result.features.unpersist()
     again.features.unpersist()
+
+
+def test_classify_builds_without_spark_jobs(spark, mt_aln, nt_aln, ld, numts, model):
+    """Building the whole classify plan — feature table, scoring,
+    filters, write-back semi-join — launches no Spark job; the first
+    action does all the work."""
+    sc = spark.sparkContext
+    group = "classify-build"
+    sc.setJobGroup(group, "plan construction only")
+    try:
+        result = classify(mt_aln, nt_aln, ld, numts, model=model)
+        feats = build_feature_table(mt_aln, nt_aln, ld, numts)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert result.features.is_cached
+    feats.unpersist()
+    result.features.unpersist()
+
+
+def test_classify_empty_mt(spark, nt_aln, ld, numts, model):
+    empty = fixtures.to_spark(spark, fixtures.mt_alignments_pdf(120)).limit(0)
+    result = classify(empty, nt_aln, ld, numts, model=model)
+    assert result.survivors.count() == 0
+    assert result.alignments.count() == 0
+    assert dict(result.features.dtypes)["MTMapQ"] == "double"
+    result.features.unpersist()

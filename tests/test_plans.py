@@ -388,3 +388,29 @@ def test_quality_gopher_compositions_have_no_self_join(spark):
         if line.strip().startswith("(") and "Join" in line
     )
     assert n_joins == 1, (n_joins, plan)
+
+
+def test_pairwise_ld_has_no_read_join(spark):
+    """LD pairs are formed in-row from the Variants array: the plan has
+    one join — the broadcast LD lookup on the pair key — and no
+    self-join or join back onto the features on Read."""
+    from mitoscape_spark.pipeline import fixtures
+    from mitoscape_spark.pipeline.features import mt_features
+    from mitoscape_spark.pipeline.ld import normalize_ld, pairwise_ld_score
+
+    ld = normalize_ld(fixtures.to_spark(spark, fixtures.ld_scores_pdf(100)))
+    feats = mt_features(
+        fixtures.to_spark(spark, fixtures.mt_alignments_pdf(20))
+    )
+    plan = plan_of(pairwise_ld_score(feats, ld))
+    joins = [
+        line for line in plan.splitlines()
+        if line.strip().startswith("(") and "Join" in line
+    ]
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], plan
+    keys = [l for l in plan.splitlines() if "Left keys" in l or "Right keys" in l]
+    assert keys and not any("Read" in l for l in keys), plan
+    # the regroup on Read (+ columns that depend on it) reuses the
+    # input's hash partitioning: the input's own groupBy is the only
+    # exchange on Read
+    assert plan.count("Arguments: hashpartitioning(Read#") == 1, plan
